@@ -6,7 +6,8 @@ package graft
   * (round-3 finding: accumulated checkpoint blocks, streaming state
   * providers, and broadcast debris made q41 run 3-4x slower in-catalogue
   * than solo; freeing helped but a residue remained). [[Bench]] spawns
-  * this as a child process and merges the numbers into its JSON line.
+  * this as a child process and merges the numbers into its JSON line;
+  * `run.Profile scaling` spawns it once per level and cycle.
   *
   * Protocol per target: one untimed warm-up, then best of two timed runs
   * (same methodology as the catalogue loop).
@@ -54,131 +55,6 @@ object BenchSolo {
         val rs = (1 to 3).map(_ => Bench.annThroughput(spark, n))
         println(s"SOLO kernel:ann:brute ${rs.map(_._1).max}")
         println(s"SOLO kernel:ann:ivf ${rs.map(_._2).max}")
-      case t if t.startsWith("kernel:multires:syncdir:") =>
-        // Ready-file barrier variant (round 5): warm up at full size,
-        // write ready-<pid> into the shared barrier dir, then poll for
-        // the parent-published start file naming the shared start/end
-        // timestamps — the lead is sized by the slowest measured warm-up
-        // across all co-run children instead of a fixed guess, so a
-        // loaded box can no longer make every child miss the window.
-        val parts = t.split(':')
-        val n = parts(3).toLong
-        val dir = new java.io.File(parts(4))
-        // two full-size warms: fresh-JVM JIT-ramp parity with the solo
-        // kernel protocol (one warm left the first timed iteration
-        // carrying C2 compilation, measured on the dedup solo anomaly)
-        Bench.spatialPipelineThroughputMultiRes(spark, n)
-        Bench.spatialPipelineThroughputMultiRes(spark, n)
-        // Single-thread host-state probe (Bench.hostProbe, splitmix64
-        // Mops) run IMMEDIATELY before and after this child's timed
-        // window: the shared host swings faster than a pair of windows
-        // (measured round 5: probes 242 -> 159 -> 226 Mops across one
-        // invocation), so the parent admits a loaded pair only when both
-        // sides' bracketing probes sit in one band — i.e. both sides
-        // actually measured the same machine.
-        def hostProbe(): Double = Bench.hostProbe()
-        val pid = ProcessHandle.current().pid()
-        java.nio.file.Files.writeString(
-          new java.io.File(dir, s"ready-$pid").toPath, "")
-        val startFile = new java.io.File(dir, "start")
-        val pollDeadline = System.currentTimeMillis() + 21 * 60 * 1000L
-        while (!startFile.exists() &&
-               System.currentTimeMillis() < pollDeadline) Thread.sleep(50)
-        if (!startFile.exists()) {
-          // Declare done even on the invalid path: a sibling that never
-          // starts must not make every healthy sibling block the full
-          // done-barrier deadline and post-probe a stale host state
-          // (round-6 ADVICE finding).
-          java.nio.file.Files.writeString(
-            new java.io.File(dir, s"done-$pid").toPath, "")
-          println(s"SOLO-INVALID $t no-start-file")
-        } else {
-          // start file: "startMs endMs instances" (instances optional for
-          // compatibility with older parents; defaults to 1 = no done
-          // barrier wait beyond this child's own file)
-          val startParts = java.nio.file.Files
-            .readString(startFile.toPath).trim.split(' ')
-          val startMs = startParts(0).toLong
-          val endMs = startParts(1).toLong
-          val instances = if (startParts.length > 2) startParts(2).toInt else 1
-          // pre-probe taken AFTER the start window is published, i.e.
-          // actually bracketing the timed window — measured before the
-          // ready file it could precede the barrier wait by many minutes,
-          // letting a host-state change slip through the 15% probe band.
-          // (The parent's lead time is sized to absorb a ~1 s probe; if it
-          // overruns startMs the child just starts late inside the window
-          // and still times its own t0..end span.)
-          val preProbe = hostProbe()
-          while (System.currentTimeMillis() < startMs) Thread.sleep(10)
-          val t0 = System.nanoTime()
-          var rows = 0L
-          while (System.currentTimeMillis() < endMs) {
-            Bench.spatialPipelineThroughputMultiRes(spark, n)
-            rows += n
-          }
-          if (rows == 0L) {
-            // only reachable if this child reached the barrier AFTER the
-            // parent's 20-min straggler cutoff published the window;
-            // still declare done so siblings' barriers count this child
-            java.nio.file.Files.writeString(
-              new java.io.File(dir, s"done-$pid").toPath, "")
-            println(s"SOLO-INVALID $t missed-window")
-          } else {
-            val rps = rows / ((System.nanoTime() - t0) / 1e9)
-            // DONE barrier before the post-probe: the window loop starts
-            // a final kernel iteration just before endMs and overshoots
-            // it, so siblings finish staggered — a child that post-probes
-            // the moment ITS loop exits measures the siblings still
-            // finishing (round-6 forensics: every co-run child's
-            // pre-probe read ~242 Mops and every post-probe ~120, a
-            // structural artifact that failed the 15% admissibility band
-            // on an otherwise healthy host). Each child declares done,
-            // then waits for all siblings' done files; only then does the
-            // post-probe measure the HOST rather than the protocol.
-            java.nio.file.Files.writeString(
-              new java.io.File(dir, s"done-$pid").toPath, "")
-            def doneCount(): Int = {
-              val fs = dir.listFiles()
-              if (fs == null) 0 else fs.count(_.getName.startsWith("done-"))
-            }
-            val doneDeadline = System.currentTimeMillis() + 10 * 60 * 1000L
-            while (doneCount() < instances &&
-                   System.currentTimeMillis() < doneDeadline) Thread.sleep(50)
-            val postProbe = hostProbe()
-            println(s"SOLO probe-pre-$pid $preProbe")
-            println(s"SOLO probe-post-$pid $postProbe")
-            println(s"SOLO $t ${rps}")
-          }
-        }
-      case t if t.startsWith("kernel:multires:sync:") =>
-        // Synchronized-window variant for the loaded-box (SPECrate-style)
-        // pair: warm up, busy-wait until the shared start timestamp, then
-        // loop the kernel until the shared deadline — so every concurrent
-        // child measures under FULL cross-instance contention (without
-        // the barrier, JVM-spinup stagger lets some timed runs execute on
-        // a partly idle box and overstate the N level).
-        val parts = t.split(':')
-        val n = parts(3).toLong
-        val startMs = parts(4).toLong
-        val endMs = parts(5).toLong
-        Bench.spatialPipelineThroughputMultiRes(spark, n) // warm
-        while (System.currentTimeMillis() < startMs) Thread.sleep(50)
-        val t0 = System.nanoTime()
-        var rows = 0L
-        while (System.currentTimeMillis() < endMs) {
-          Bench.spatialPipelineThroughputMultiRes(spark, n)
-          rows += n
-        }
-        if (rows == 0L) {
-          // Missed the barrier or the deadline (spinup + warm-up overran
-          // the lead time): zero timed iterations means NO measurement,
-          // not a 0 rows/s one — emit a sentinel the parent must exclude
-          // so it can't silently drag a co-run average down.
-          println(s"SOLO-INVALID $t missed-window")
-        } else {
-          val rps = rows / ((System.nanoTime() - t0) / 1e9)
-          println(s"SOLO $t ${rps}")
-        }
       case t if t.startsWith("kernel:multires:") =>
         // full-width indexing kernel at an explicit row count, solo
         val n = t.substring("kernel:multires:".length).toLong

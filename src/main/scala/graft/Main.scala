@@ -11,6 +11,7 @@ import org.apache.spark.sql.SparkSession
   *   pipeline <nPages> <workDir>   checkpointed flagship pipeline (resumable)
   *   verify <sfDir> <outDir>       correctness dump (same as graft.Verify)
   *   bench                         headline throughput (same as graft.Bench)
+  *   scaling <rows> [N] [4N]       N -> 4N efficiency (graft.run.Profile scaling)
   *
   * Under spark-submit the session inherits the cluster master/conf; the
   * local fallback mirrors the sandbox defaults.
@@ -21,7 +22,7 @@ object Main {
     cmd match {
       case "verify" => Verify.main(args.drop(1))
       case "bench" => Bench.main(args.drop(1))
-      case "scaling" => run.ScalingBench.main(args.drop(1))
+      case "scaling" => run.Profile.main(args)
       case "pipeline" =>
         val nPages = args.lift(1).map(_.toLong).getOrElse(100000L)
         val workDir = args.lift(2).getOrElse(

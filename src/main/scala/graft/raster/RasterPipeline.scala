@@ -3,7 +3,7 @@ package graft.raster
 import graft.core.Constants
 import graft.index.IndexExpressions._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
 /** The reference's `DataFrameWrapper.to_zarr` (`dataframe.py:415-543`,
   * `_dataframe.py:401-673`) as a Spark-first distributed pipeline:
@@ -237,21 +237,10 @@ object RasterPipeline {
       }
   }
 
-  /** Salted point rasterization for skewed tiles (north rule: "skew
-    * handled by salted repartitioning on hot cells").
-    *
-    * A hot tile (dense urban cell at web scale) would make one task burn
-    * orders of magnitude more rows than the median. Here hot tiles fan
-    * out over `ceil(count/targetRowsPerTask)` salted tasks, each burning
-    * a PARTIAL grid that tracks, per cell, the burn value AND the highest
-    * `orderCol` that wrote it; the per-tile merge keeps the value with
-    * the highest order — bit-identical to the unsalted last-write-wins-
-    * by-order result (property-tested in RasterStoreSpec).
-    */
   /** Geometry variant of the salted path: same order-merged partial
-    * grids, but each row burns a full WKB geometry (scanline) instead of
-    * a point — `Rasterize.burnGeometryOrdered` tracks per-cell write
-    * order inside the burn.
+    * grids as [[toTileStoreSaltedPoints]], but each row burns a full WKB
+    * geometry (scanline) instead of a point — `Rasterize.burnGeometryOrdered`
+    * tracks per-cell write order inside the burn.
     */
   def toTileStoreSaltedGeoms(
       df: DataFrame, geometryCol: String, orderCol: String,
@@ -261,58 +250,40 @@ object RasterPipeline {
       overwrite: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val row = df.agg(min(col(valueCol)).cast("double"),
-      max(col(valueCol)).cast("double")).head()
-    val (dtype, nodata) = Constants.dtypeAndNodata(row.getDouble(0), row.getDouble(1))
-    val store = new TileStore(path)
-    store.init(StoreHeader("EPSG:27700", cellSize, 0d, 0d,
-      Constants.BngXMax.toDouble, Constants.BngYMax.toDouble, tileSize,
-      Seq(ColumnSpec(valueCol, dtype, nodata)), Map("salted" -> "true")), overwrite)
-    val tileCells = math.round(tileSize / cellSize).toInt
-
-    val rows = df.select(
-      explode(bng_index(col(geometryCol), tileSize.toLong, "interior")).as("__tile"),
-      col(geometryCol).as("__g"),
-      col(orderCol).cast("long").as("__ord"),
-      col(valueCol).cast("double").as("__v"))
-    val salted = graft.ops.Salting.withSalt(rows, "__tile", "__ord", targetRowsPerTask)
-      .as[(String, Array[Byte], Long, Double, Int)]
-
-    val partials = salted
-      .groupByKey { case (tile, _, _, _, salt) => (tile, salt) }
-      .mapGroups { (key: (String, Int), it: Iterator[(String, Array[Byte], Long, Double, Int)]) =>
-        val tile = key._1
-        val (minx, miny, _, _) = graft.index.Bng.bounds(tile)
-        val grid = Rasterize.empty(minx, miny, cellSize, tileCells, fill = nodata)
-        val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
-        it.foreach { case (_, wkb, o, v, _) =>
-          Rasterize.burnGeometryOrdered(grid, ord, graft.geo.Wkb.read(wkb), v, o)
-        }
-        (tile, grid.data.toSeq, ord.toSeq)
-      }
-
-    val metrics = partials
-      .groupByKey(_._1)
-      .mapGroups { (tile: String, parts: Iterator[(String, Seq[Double], Seq[Long])]) =>
-        val data = Array.fill(tileCells * tileCells)(nodata)
-        val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
-        parts.foreach { case (_, pd, po) =>
-          var i = 0
-          while (i < data.length) {
-            if (Rasterize.ordWins(po(i), pd(i), ord(i), data(i))) {
-              ord(i) = po(i); data(i) = pd(i)
-            }
-            i += 1
+    salted(df, valueCol, path, cellSize, tileSize, Constants.BngXMax.toDouble,
+        Constants.BngYMax.toDouble, overwrite) { (nodata, tileCells) =>
+      val rows = df.select(
+        explode(bng_index(col(geometryCol), tileSize.toLong, "interior")).as("__tile"),
+        col(geometryCol).as("__g"),
+        col(orderCol).cast("long").as("__ord"),
+        col(valueCol).cast("double").as("__v"))
+      graft.ops.Salting.withSalt(rows, "__tile", "__ord", targetRowsPerTask)
+        .as[(String, Array[Byte], Long, Double, Int)]
+        .groupByKey { case (tile, _, _, _, salt) => (tile, salt) }
+        .mapGroups { (key: (String, Int), it: Iterator[(String, Array[Byte], Long, Double, Int)]) =>
+          val tile = key._1
+          val (minx, miny, _, _) = graft.index.Bng.bounds(tile)
+          val grid = Rasterize.empty(minx, miny, cellSize, tileCells, fill = nodata)
+          val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
+          it.foreach { case (_, wkb, o, v, _) =>
+            Rasterize.burnGeometryOrdered(grid, ord, graft.geo.Wkb.read(wkb), v, o)
           }
+          (tile, grid.data.toSeq, ord.toSeq)
         }
-        new TileStore(path).writeRegion(tile, valueCol, dtype, data)
-        val burned = data.count(d => !(d == nodata || (d.isNaN && nodata.isNaN))).toLong
-        (tile, valueCol, burned)
-      }
-      .toDF("tile", "column", "burned_cells")
-    metrics.localCheckpoint(true)
+    }
   }
 
+  /** Salted point rasterization for skewed tiles (north rule: "skew
+    * handled by salted repartitioning on hot cells").
+    *
+    * A hot tile (dense urban cell at web scale) would make one task burn
+    * orders of magnitude more rows than the median. Here hot tiles fan
+    * out over `ceil(count/targetRowsPerTask)` salted tasks, each burning
+    * a PARTIAL grid that tracks, per cell, the burn value AND the highest
+    * `orderCol` that wrote it; the per-tile merge keeps the value with
+    * the highest order — bit-identical to the unsalted last-write-wins-
+    * by-order result (property-tested in ResumeSaltMetricsSpec).
+    */
   def toTileStoreSaltedPoints(
       df: DataFrame, xCol: String, yCol: String, orderCol: String,
       valueCol: String, path: String,
@@ -323,47 +294,57 @@ object RasterPipeline {
       overwrite: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    salted(df, valueCol, path, cellSize, tileSize, canvasMaxX, canvasMaxY,
+        overwrite) { (nodata, tileCells) =>
+      val pts = df.select(
+        graft.index.IndexExpressions.bng_index_point(
+          col(xCol).cast("double"), col(yCol).cast("double"), tileSize.toLong).as("__tile"),
+        col(xCol).cast("double").as("__x"), col(yCol).cast("double").as("__y"),
+        col(orderCol).cast("long").as("__ord"), col(valueCol).cast("double").as("__v"))
+      graft.ops.Salting.withSalt(pts, "__tile", "__ord", targetRowsPerTask)
+        .as[(String, Double, Double, Long, Double, Int)]
+        .groupByKey { case (tile, _, _, _, _, salt) => (tile, salt) }
+        .mapGroups { (key: (String, Int), rows: Iterator[(String, Double, Double, Long, Double, Int)]) =>
+          val tile = key._1
+          val (minx, miny, _, _) = graft.index.Bng.bounds(tile)
+          val grid = Rasterize.empty(minx, miny, cellSize, tileCells, fill = nodata)
+          val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
+          rows.foreach { case (_, x, y, o, v, _) =>
+            val c = grid.colOf(x); val r = grid.rowOf(y)
+            if (c >= 0 && r >= 0) {
+              val idx = grid.idx(r, c)
+              if (Rasterize.ordWins(o, v, ord(idx), grid.data(idx))) {
+                ord(idx) = o; grid.data(idx) = v
+              }
+            }
+          }
+          (tile, grid.data.toSeq, ord.toSeq)
+        }
+    }
+  }
 
+  /** Shared frame of the salted paths: one (min, max) stats job picks the
+    * value column's dtype/nodata, the store header is written, `burn`
+    * builds the phase-1 partial (value, order) grids per (tile, salt)
+    * from `(nodata, tileCells)`, and phase 2 merges the partials of each
+    * tile by order and writes its region.
+    */
+  private def salted(
+      df: DataFrame, valueCol: String, path: String,
+      cellSize: Double, tileSize: Double,
+      canvasMaxX: Double, canvasMaxY: Double, overwrite: Boolean)(
+      burn: (Double, Int) => Dataset[(String, Seq[Double], Seq[Long])]): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
     val row = df.agg(min(col(valueCol)).cast("double"),
       max(col(valueCol)).cast("double")).head()
     val (dtype, nodata) = Constants.dtypeAndNodata(row.getDouble(0), row.getDouble(1))
-    val spec = ColumnSpec(valueCol, dtype, nodata)
-    val store = new TileStore(path)
-    store.init(StoreHeader("EPSG:27700", cellSize, 0d, 0d, canvasMaxX,
-      canvasMaxY, tileSize, Seq(spec), Map("salted" -> "true")), overwrite)
-
+    new TileStore(path).init(StoreHeader("EPSG:27700", cellSize, 0d, 0d, canvasMaxX,
+      canvasMaxY, tileSize, Seq(ColumnSpec(valueCol, dtype, nodata)),
+      Map("salted" -> "true")), overwrite)
     val tileCells = math.round(tileSize / cellSize).toInt
-    val pts = df.select(
-      graft.index.IndexExpressions.bng_index_point(
-        col(xCol).cast("double"), col(yCol).cast("double"), tileSize.toLong).as("__tile"),
-      col(xCol).cast("double").as("__x"), col(yCol).cast("double").as("__y"),
-      col(orderCol).cast("long").as("__ord"), col(valueCol).cast("double").as("__v"))
 
-    val salted = graft.ops.Salting.withSalt(pts, "__tile", "__ord", targetRowsPerTask)
-      .as[(String, Double, Double, Long, Double, Int)]
-
-    // phase 1: burn partial (value, order) grids per (tile, salt)
-    val partials = salted
-      .groupByKey { case (tile, _, _, _, _, salt) => (tile, salt) }
-      .mapGroups { (key: (String, Int), rows: Iterator[(String, Double, Double, Long, Double, Int)]) =>
-        val tile = key._1
-        val (minx, miny, _, _) = graft.index.Bng.bounds(tile)
-        val grid = Rasterize.empty(minx, miny, cellSize, tileCells, fill = nodata)
-        val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
-        rows.foreach { case (_, x, y, o, v, _) =>
-          val c = grid.colOf(x); val r = grid.rowOf(y)
-          if (c >= 0 && r >= 0) {
-            val idx = grid.idx(r, c)
-            if (Rasterize.ordWins(o, v, ord(idx), grid.data(idx))) {
-              ord(idx) = o; grid.data(idx) = v
-            }
-          }
-        }
-        (tile, grid.data.toSeq, ord.toSeq)
-      }
-
-    // phase 2: merge partials per tile by order, write region
-    val metrics = partials
+    val metrics = burn(nodata, tileCells)
       .groupByKey(_._1)
       .mapGroups { (tile: String, parts: Iterator[(String, Seq[Double], Seq[Long])]) =>
         val data = Array.fill(tileCells * tileCells)(nodata)
