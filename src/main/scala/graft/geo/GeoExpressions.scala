@@ -38,8 +38,8 @@ object GeoExpressions {
     toCol(StMakeBox(Seq(expr(minx), expr(miny), expr(maxx), expr(maxy))))
 
   /** Fused polygon-covers-point predicate over raw coordinates: no WKB
-    * point round-trip, and the (few, repeated after a broadcast join)
-    * polygon geometries are prepared once per thread and cached — the
+    * point round-trip, and each polygon geometry is prepared once per JVM
+    * and shared by every task thread ([[TesterCache]]) — the
     * "prepare-once, batch-evaluate" vectorized-PIP shape (north rule R8).
     */
   def st_covers_point(geom: Column, x: Column, y: Column): Column =
@@ -95,8 +95,10 @@ case class StPredicatePointKeyed(first: Expression, second: Expression,
     * at full 32-thread saturation the collector became the join stage's
     * scaling wall (ProfileScaling: encode 0.81 eff, join 0.66). Here the
     * key/x/y are unboxed and the WKB child's code is emitted INSIDE the
-    * cache-miss branch, so the hit path (every row after the first per
-    * polygon per thread) allocates nothing and never touches the bytes.
+    * cache-miss branch, so on the hit path (every row after the first per
+    * polygon per JVM) the predicate itself never reads the bytes. When a
+    * BroadcastHashJoin absorbs the filter as its join condition, the join
+    * still copies the build row's WKB out before the predicate runs.
     *
     * INVARIANT (required for codegen/interpreted agreement): the key
     * child MUST be `st_geom_key(geom)` over the SAME geometry child — a
@@ -146,8 +148,8 @@ case class StPredicatePointKeyed(first: Expression, second: Expression,
       t: Expression, q: Expression): Expression = copy(f, s, t, q)
 }
 
-/** (polyWkb, x, y) -> boolean; prepared-geometry cache keyed by WKB
-  * content hash (thread-local, bounded).
+/** (polyWkb, x, y) -> boolean; prepared-geometry lookup keyed by WKB
+  * content hash in the JVM-wide, vertex-bounded [[TesterCache]].
   */
 case class StPredicatePoint(first: Expression, second: Expression,
     third: Expression, op: String)
@@ -166,20 +168,22 @@ case class StPredicatePoint(first: Expression, second: Expression,
       f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
 }
 
-/** Thread-confined point-predicate evaluator for ONE geometry, built
-  * once per (thread, geometry) and cached. Three tiers, cheapest exact
-  * method first:
+/** Point-predicate evaluator for ONE geometry, built once per geometry
+  * per JVM and shared by every task thread through [[TesterCache]]. It is
+  * immutable after construction, so concurrent calls are safe. Three
+  * tiers, cheapest exact method first:
   *  - axis-aligned rectangle: the envelope test IS the covers test
-  *    (4 double compares per row; JTS's own Geometry.covers applies the
-  *    same shortcut) and strict envelope interiority is contains;
+  *    (4 double compares per row, no allocation; JTS's own
+  *    Geometry.covers applies the same shortcut) and strict envelope
+  *    interiority is contains;
   *  - any other polygonal geometry: envelope reject then
-  *    IndexedPointInAreaLocator.locate on a reused Coordinate —
-  *    covers == not EXTERIOR, contains == INTERIOR, no Point object, no
-  *    per-row envelope realloc (the prepared-geometry path allocated an
-  *    Envelope via geometryChanged + visitor objects per call — the
-  *    largest remaining garbage source in the spatial join's refine);
-  *  - non-polygonal geometry: PreparedGeometry with a private mutable
-  *    Point (rare — point/line dims in a PIP join).
+  *    IndexedPointInAreaLocator.locate on a fresh Coordinate —
+  *    covers == not EXTERIOR, contains == INTERIOR. JTS builds the
+  *    locator's interval index once, lazily and under its own lock, and
+  *    allocates its ray-crossing counter per call, so one locator serves
+  *    every thread;
+  *  - non-polygonal geometry: PreparedGeometry against a fresh Point
+  *    (rare — point/line dims in a PIP join).
   */
 final class PointTester(geom: Geometry) {
   private val env = geom.getEnvelopeInternal
@@ -193,45 +197,80 @@ final class PointTester(geom: Geometry) {
   private val prepared =
     if (rect || locator != null) null
     else org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(geom)
-  private val coord = new org.locationtech.jts.geom.Coordinate(0, 0)
-  private val pt =
-    if (prepared != null) Wkb.factory.createPoint(new org.locationtech.jts.geom.Coordinate(0, 0))
-    else null
+
+  /** Vertices of the geometry: the unit [[TesterCache]] budgets in. */
+  val vertices: Int = geom.getNumPoints
 
   def covers(x: Double, y: Double): Boolean = {
     if (x < minX || x > maxX || y < minY || y > maxY) false
     else if (rect) true
-    else if (locator != null) {
-      coord.x = x; coord.y = y
-      locator.locate(coord) != org.locationtech.jts.geom.Location.EXTERIOR
-    } else slowPath(x, y, contains = false)
+    else if (locator != null)
+      locator.locate(new org.locationtech.jts.geom.Coordinate(x, y)) !=
+        org.locationtech.jts.geom.Location.EXTERIOR
+    else slowPath(x, y, contains = false)
   }
 
   def contains(x: Double, y: Double): Boolean = {
     if (rect) x > minX && x < maxX && y > minY && y < maxY
     else if (x < minX || x > maxX || y < minY || y > maxY) false
-    else if (locator != null) {
-      coord.x = x; coord.y = y
-      locator.locate(coord) == org.locationtech.jts.geom.Location.INTERIOR
-    } else slowPath(x, y, contains = true)
+    else if (locator != null)
+      locator.locate(new org.locationtech.jts.geom.Coordinate(x, y)) ==
+        org.locationtech.jts.geom.Location.INTERIOR
+    else slowPath(x, y, contains = true)
   }
 
   private def slowPath(x: Double, y: Double, contains: Boolean): Boolean = {
-    val c = pt.getCoordinate
-    c.x = x; c.y = y
-    pt.geometryChanged()
+    val pt = Wkb.point(x, y)
     if (contains) prepared.contains(pt) else prepared.covers(pt)
   }
 }
 
+/** Concurrent geometry-key -> [[PointTester]] map bounded by the vertices
+  * its testers retain. When an insert would pass `vertexBudget` the whole
+  * map is dropped and refilled on demand: refine candidates arrive in point
+  * order, not polygon order, so there is no recency worth keeping. The hit
+  * path is one lock-free `get`; a miss builds its tester outside any
+  * lock, then takes a short lock to admit it, so the budget holds exactly
+  * and racing threads all end up with the first tester stored for a key.
+  */
+final class TesterCache(val vertexBudget: Long) {
+  private val map =
+    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, PointTester]()
+  private var retained = 0L // guarded by this
+
+  def get(key: Long): PointTester = map.get(java.lang.Long.valueOf(key))
+
+  def put(key: Long, wkb: Array[Byte]): PointTester = {
+    val built = new PointTester(Wkb.read(wkb))
+    val k = java.lang.Long.valueOf(key)
+    if (built.vertices > vertexBudget) built // never fits: serve uncached
+    else synchronized {
+      if (retained + built.vertices > vertexBudget && !map.containsKey(k)) {
+        map.clear(); retained = 0L
+      }
+      val prior = map.putIfAbsent(k, built)
+      if (prior != null) prior else { retained += built.vertices; built }
+    }
+  }
+
+  def retainedVertices: Long = synchronized(retained)
+  def size: Int = map.size
+}
+
 object StPredicatePoint {
-  private val cache = ThreadLocal.withInitial[
-      java.util.LinkedHashMap[java.lang.Long, PointTester]](
-    () => new java.util.LinkedHashMap[java.lang.Long, PointTester](
-        1024, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[java.lang.Long,
-          PointTester]): Boolean = size() > 512
-    })
+  /** Retained heap per vertex of a 512-vertex concave polygon's tester
+    * with its locator index built (parsed coordinates, index segments and
+    * interval-tree nodes): 140.5-140.8 B measured as the post-GC heap
+    * growth of 2,000 such testers, JDK 17, compressed oops.
+    */
+  private[graft] val BytesPerVertex = 141L
+
+  /** One cache per JVM: each geometry is parsed and indexed once per
+    * executor, not once per task thread. Its budget is an eighth of the
+    * maximum heap at [[BytesPerVertex]].
+    */
+  private[graft] val shared =
+    new TesterCache(Runtime.getRuntime.maxMemory / 8 / BytesPerVertex)
 
   private[graft] def hashBytes(b: Array[Byte]): Long = {
     var h = 0xcbf29ce484222325L
@@ -251,17 +290,13 @@ object StPredicatePoint {
   /** Hit-path lookup for the codegen'd predicate: no boxing beyond the
     * Long key, no WKB access. Returns null on miss.
     */
-  def testerByKeyOrNull(keyHash: Long): PointTester =
-    cache.get().get(java.lang.Long.valueOf(keyHash))
+  def testerByKeyOrNull(keyHash: Long): PointTester = shared.get(keyHash)
 
-  /** Miss-path insert: build the tester from the WKB (first sight of
-    * this geometry on this thread) and cache.
+  /** Miss-path insert: build the tester from the WKB (first sight of this
+    * geometry in this JVM, or first since the cache was last dropped).
     */
-  def testerByKeyPut(keyHash: Long, wkb: Array[Byte]): PointTester = {
-    val t = new PointTester(Wkb.read(wkb))
-    cache.get().put(java.lang.Long.valueOf(keyHash), t)
-    t
-  }
+  def testerByKeyPut(keyHash: Long, wkb: Array[Byte]): PointTester =
+    shared.put(keyHash, wkb)
 
   /** Predicate dispatch for interpreted eval and generated code. */
   def testPoint(t: PointTester, x: Double, y: Double, contains: Boolean): Boolean =
@@ -379,38 +414,4 @@ case class StGeomFromText(child: Expression)
   override protected def nullSafeEval(v: Any): Any =
     Wkb.write(Wkb.readWkt(v.asInstanceOf[UTF8String].toString))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Vectorized point-in-polygon refine (north-rule R8): the polygon side is
-  * broadcast as a map of polygonId -> PreparedGeometry (prepare once per
-  * polygon per JVM), and each probe evaluates `PreparedGeometry.covers`
-  * against raw (x, y) doubles without even decoding point WKB.
-  */
-case class PipPrepared(
-    polyId: Expression, x: Expression, y: Expression,
-    polys: scala.collection.Map[Long, Array[Byte]])
-    extends Expression with CodegenFallback {
-  override def children: Seq[Expression] = Seq(polyId, x, y)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-
-  @transient private lazy val prepared = {
-    val pf = new org.locationtech.jts.geom.prep.PreparedGeometryFactory
-    polys.map { case (id, wkb) => id -> pf.create(Wkb.read(wkb)) }
-  }
-  @transient private lazy val pointFactory = Wkb.factory
-
-  override def eval(input: InternalRow): Any = {
-    val id = polyId.eval(input).asInstanceOf[Long]
-    val px = x.eval(input).asInstanceOf[Double]
-    val py = y.eval(input).asInstanceOf[Double]
-    prepared.get(id) match {
-      case Some(pg) => pg.covers(pointFactory.createPoint(
-        new org.locationtech.jts.geom.Coordinate(px, py)))
-      case None => false
-    }
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(polyId = newChildren(0), x = newChildren(1), y = newChildren(2))
 }

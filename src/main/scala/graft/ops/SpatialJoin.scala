@@ -44,8 +44,9 @@ object SpatialJoin {
     // high parallelism (~1.1x from 8->32 threads, measured in BENCH.md);
     // long keys probe ~3x faster and keep scaling. The geometry content
     // hash is computed HERE (once per polygon-cell row on the tiny build
-    // side) so the refine's prepared-geometry cache never re-hashes WKB
-    // bytes per candidate row.
+    // side) so the refine never re-hashes WKB bytes per candidate row: it
+    // is the key of the JVM-wide tester cache, where each polygon is
+    // parsed and indexed once per executor and shared by all its threads.
     val polyCells = polygons
       .withColumn("__cell__", explode(bng_index_ids(col(geomCol), resolution, "intersects")))
       .withColumn("__gkey__", st_geom_key(col(geomCol)))

@@ -1,7 +1,8 @@
 package graft
 
 import graft.geo.GeoExpressions._
-import graft.geo.Wkb
+import graft.geo.{PointTester, StPredicatePoint, TesterCache, Wkb}
+import java.util.concurrent.{Callable, CyclicBarrier, Executors}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -95,5 +96,122 @@ class GeoExprSpec extends SparkSpec {
     assert(ids(0) == graft.index.H3.cellId(m(2), m(3), 12))
     assert(ids(5) == graft.index.H3.parent(ids(4), 7))
     assert(st.getLong(1) == graft.index.S2.cellId(m(2), m(3), 12))
+  }
+
+  // More distinct concave polygons than the 512 entries a per-thread LRU
+  // once held, so a cache that forgets or mixes up testers shows here.
+  private val polysGen: Gen[IndexedSeq[Array[Byte]]] = Gen.listOfN(640, for {
+    cx <- Gen.choose(0.0, 600000.0); cy <- Gen.choose(0.0, 1200000.0)
+    r <- Gen.choose(20.0, 4000.0); k <- Gen.choose(5, 48)
+    p1 <- Gen.choose(0.0, 2 * math.Pi); p2 <- Gen.choose(0.0, 2 * math.Pi)
+  } yield Wkb.write(StarPolygons.star(cx, cy, r, k, p1, p2))).map(_.toIndexedSeq)
+
+  /** (polygon, x, y) queries: points in and around each envelope, and
+    * exact vertices, where covers and contains disagree.
+    */
+  private def queriesGen(polys: IndexedSeq[Array[Byte]]): Gen[IndexedSeq[(Int, Double, Double)]] = {
+    val geoms = polys.map(Wkb.read)
+    Gen.listOfN(4000, for {
+      i <- Gen.choose(0, polys.length - 1)
+      u <- Gen.choose(-0.1, 1.1); v <- Gen.choose(-0.1, 1.1)
+      vertex <- Gen.frequency(3 -> Gen.const(-1), 1 -> Gen.choose(0, 1000))
+    } yield {
+      val g = geoms(i)
+      if (vertex >= 0) {
+        val c = g.getCoordinates()(vertex % (g.getNumPoints - 1))
+        (i, c.x, c.y)
+      } else {
+        val e = g.getEnvelopeInternal
+        (i, e.getMinX + u * e.getWidth, e.getMinY + v * e.getHeight)
+      }
+    }).map(_.toIndexedSeq)
+  }
+
+  /** Runs `work(thread)` on every thread of `pool` at once (a barrier
+    * lines up their first step, so first sightings of a key race) and
+    * returns the results in thread order.
+    */
+  private def onAllThreads[T](pool: java.util.concurrent.ExecutorService,
+      threads: Int)(work: Int => T): Seq[T] = {
+    val start = new CyclicBarrier(threads)
+    (0 until threads).map { t =>
+      pool.submit(new Callable[T] { def call(): T = { start.await(); work(t) } })
+    }.map(_.get)
+  }
+
+  test("shared tester cache: 8 threads answer covers/contains exactly like JTS (property)") {
+    val threads = 8
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      val gen = for { polys <- polysGen; qs <- queriesGen(polys) } yield (polys, qs)
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(4),
+        Prop.forAllNoShrink(gen) { case (polys, qs) =>
+          val keys = polys.map(StPredicatePoint.hashBytes)
+          val geoms = polys.map(Wkb.read)
+          val expected = qs.map { case (i, x, y) =>
+            val p = Wkb.point(x, y)
+            (geoms(i).covers(p), geoms(i).contains(p))
+          }
+          val wrong = onAllThreads(pool, threads) { t =>
+            // Each thread walks every query from its own offset.
+            (0 until qs.length).count { n =>
+              val q = (n + t * qs.length / threads) % qs.length
+              val (i, x, y) = qs(q)
+              val tester = StPredicatePoint.testerByKey(keys(i), polys(i))
+              StPredicatePoint.testPoint(tester, x, y, contains = false) != expected(q)._1 ||
+                StPredicatePoint.testPoint(tester, x, y, contains = true) != expected(q)._2
+            }
+          }
+          expected.exists(e => e._1 && !e._2) && wrong.sum == 0
+        })
+      assert(res.passed, res.status.toString)
+    } finally pool.shutdown()
+  }
+
+  test("tester cache past its vertex budget: retained vertices stay within it, answers stay exact") {
+    val threads = 8
+    val pool = Executors.newFixedThreadPool(threads)
+    def lookup(c: TesterCache, k: Long, wkb: Array[Byte]): PointTester = {
+      val hit = c.get(k)
+      if (hit != null) hit else c.put(k, wkb)
+    }
+    try {
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(4),
+        Prop.forAllNoShrink(polysGen) { polys =>
+          val keys = polys.map(StPredicatePoint.hashBytes)
+          val geoms = polys.map(Wkb.read)
+          val budget = 3000L // a few dozen of these polygons
+          val cache = new TesterCache(budget)
+          def exact(i: Int, t: PointTester): Boolean = {
+            val c = geoms(i).getCentroid.getCoordinate
+            val v = geoms(i).getCoordinates()(0)
+            t.covers(c.x, c.y) == geoms(i).covers(Wkb.point(c.x, c.y)) &&
+              t.contains(c.x, c.y) == geoms(i).contains(Wkb.point(c.x, c.y)) &&
+              t.covers(v.x, v.y) && !t.contains(v.x, v.y)
+          }
+          val bad = onAllThreads(pool, threads) { t =>
+            (0 until polys.length).count { n =>
+              val i = (n + t * polys.length / threads) % polys.length
+              val ok = exact(i, lookup(cache, keys(i), polys(i)))
+              !ok || cache.retainedVertices > budget
+            }
+          }
+          val dropped = cache.size < polys.length
+          // After the drops, a sequential pass still answers exactly.
+          val after = polys.indices.forall(i => exact(i, lookup(cache, keys(i), polys(i))))
+          bad.sum == 0 && dropped && after && cache.retainedVertices <= budget
+        })
+      assert(res.passed, res.status.toString)
+
+      // Racing misses on one key all get the first tester stored.
+      val wkb = Wkb.write(StarPolygons.star(0, 0, 100, 32, 0.3, 1.1))
+      val shared = new TesterCache(vertexBudget = 1000L)
+      val got = onAllThreads(pool, threads)(_ => lookup(shared, 42L, wkb))
+      assert(got.forall(_ eq got.head) && shared.size == 1)
+      // A geometry larger than the whole budget is served but not kept.
+      val big = Wkb.write(StarPolygons.star(0, 0, 100, 2000, 0.3, 1.1))
+      assert(shared.put(7L, big).covers(0, 0))
+      assert(shared.get(7L) == null && shared.retainedVertices == 33)
+    } finally pool.shutdown()
   }
 }

@@ -48,6 +48,43 @@ class SpatialJoinSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("point-in-polygon over 600 concave polygons matches JTS for covers and contains") {
+    // More polygons than a 512-entry per-thread cache held, so every
+    // executor thread sees each polygon again after many others.
+    val wards = (0 until 600).map { j =>
+      val cx = 300000.0 + (j % 25) * 5000.0 + 1000.0 * rnd(j, 20)
+      val cy = 400000.0 + (j / 25) * 5000.0 + 1000.0 * rnd(j, 21)
+      (j.toLong, StarPolygons.star(cx, cy, 1500.0 + 800.0 * rnd(j, 22),
+        24 + (rnd(j, 23) * 40).toInt, 6 * rnd(j, 24), 6 * rnd(j, 25)))
+    }
+    // Random points over the block, plus exact vertices (on the boundary:
+    // covered but not contained).
+    val scattered = (0L until 3000L).map { i =>
+      (i, 300000.0 + rnd(i, 26) * 126000.0, 400000.0 + rnd(i, 27) * 121000.0)
+    }
+    val onVertex = (0L until 300L).map { i =>
+      val c = wards((i * 7 % 600).toInt)._2.getCoordinates()((i % 20).toInt)
+      (3000L + i, c.x, c.y)
+    }
+    val points = scattered ++ onVertex
+    val ptsDf = points.toDF("pid", "x", "y").repartition(4)
+    val polyDf = wards.map { case (j, g) => (j, Wkb.write(g)) }.toDF("poly_id", "geometry")
+    for (predicate <- Seq("covers", "contains")) {
+      val got = SpatialJoin.pointInPolygon(ptsDf, "x", "y", polyDf, "geometry",
+          resolution = 10000L, predicate = predicate)
+        .select("pid", "poly_id").as[(Long, Long)].collect()
+      val expected = (for {
+        (pid, x, y) <- points
+        (j, g) <- wards
+        p = Wkb.point(x, y)
+        if (if (predicate == "covers") g.covers(p) else g.contains(p))
+      } yield (pid, j)).toSet
+      assert(expected.size > 300, s"$predicate oracle too sparse — fixture broken")
+      assert(got.length == got.toSet.size, s"$predicate: duplicate pairs")
+      assert(got.toSet == expected, predicate)
+    }
+  }
+
   test("geomJoin polygons x polygons intersects matches oracle incl. multi-cell dedupe") {
     val a = tris.take(15).toDF("a_id", "wkt")
       .withColumn("ga", st_geomfromtext(col("wkt"))).drop("wkt")
